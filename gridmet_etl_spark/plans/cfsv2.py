@@ -2,7 +2,11 @@
 
 Method 1 (ensemble median, etl.py:283-340): exact median across 48 members
 per cell FIRST, then weighted aggregation — the median and the weighted mean
-do not commute, so the order is semantic, not incidental.
+do not commute, so the order is semantic, not incidental. The median is
+``ensemble_median``'s sorted-members kernel (each cell's members collected
+and sorted once, the middle picked with Spark's Percentile interpolation,
+equal to ``F.median`` bit for bit); the job has two data exchanges, the
+median's (var, time, i, j) shuffle and the weighted aggregation's.
 
 Method 2 (all members, etl.py:342-383): the reference loops 48 sequential
 per-member pipelines; the engine keeps ``ens`` in the join/group keys so a

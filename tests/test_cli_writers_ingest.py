@@ -353,8 +353,11 @@ def test_opendap_fetcher_maps_dims_to_grid_schema(spark):
     assert grid.filter(F.col("value").isNull()).count() == 1
 
 
+GOLDEN = os.path.join(os.path.dirname(os.path.abspath(__file__)), "golden")
+
+
 def _parse_golden_header(path):
-    """Extract {var: {attr: value}} from a reference ncdump header dump."""
+    """Extract {var: {attr: value}} from an ncdump header excerpt."""
     import re
 
     attrs = {}
@@ -367,25 +370,28 @@ def _parse_golden_header(path):
 @pytest.mark.parametrize(
     "golden,calendar,vars_checked",
     [
-        ("/root/reference/gm_header.md", "proleptic_gregorian",
+        ("gm_header.md", "proleptic_gregorian",
          ["tmax", "tmin", "prcp", "rhmax", "rhmin", "ws", "humidity"]),
-        ("/root/reference/cfsv2_median_header.md", "julian",
+        ("cfsv2_median_header.md", "julian",
          ["tmax", "tmin", "prcp"]),
     ],
 )
 def test_sidecar_matches_golden_header(spark, tmp_path, golden, calendar, vars_checked):
     """Structural comparison against the reference's published NetCDF
-    headers: per-variable units/long_name and the PER-PIPELINE time
+    headers (the facts vendored in tests/golden/, sourced there):
+    per-variable units/long_name, the _FillValue and the PER-PIPELINE time
     calendar (gridMET proleptic_gregorian, CFSv2 julian) must match what
     our sidecar would stamp at the NetCDF edge."""
-    gold = _parse_golden_header(golden)
+    gold = _parse_golden_header(os.path.join(GOLDEN, golden))
     df = spark.createDataFrame(
         [(1, date(2024, 4, 1)) + tuple(float(i) for i in range(len(vars_checked)))],
         "feature_id long, time date, " + ", ".join(f"{v} double" for v in vars_checked),
     )
     write_output(df, str(tmp_path), file_prefix="hdr", calendar=calendar)
-    side = json.load(open(tmp_path / "hdr_attrs.json"))["variables"]
+    sidecar = json.load(open(tmp_path / "hdr_attrs.json"))
+    side = sidecar["variables"]
     assert side["time"]["calendar"] == gold["time"]["calendar"] == calendar
+    assert sidecar["fill_value_at_netcdf_edge"] == float(gold["tmax"]["_FillValue"])
     for v in vars_checked:
         assert side[v]["units"] == gold[v]["units"], v
         assert side[v]["long_name"] == gold[v]["long_name"], v
